@@ -11,9 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * by `SheetParserSpec`.
   *
   * Scale note: discovery and fetch are driver-side by nature (a handful
-  * of workbook URLs); the distributed axis starts at
-  * [[SheetParser.compileAll]], which unions per-sheet DataFrame plans so
-  * Spark schedules every sheet's scan concurrently.
+  * of workbook URLs), and so is this lifecycle's parse. The distributed
+  * read is the `graft-sheet` source, which plans with the same
+  * [[Ingest.recognisedSheets]] and parses each sheet on an executor.
   */
 object LinkDiscovery {
 
@@ -73,20 +73,28 @@ object Ingest {
   def sheetNameMatches(name: String): Boolean =
     SheetName.findPrefixMatchOf(name).isDefined
 
-  /** The full `compile_all` lifecycle (`main.py:135-151`): fetch every
-    * workbook URL, decode, gate sheets by name, derive the year from the
-    * URL, parse + union via [[SheetParser.compileAll]] (which raises on
-    * zero parsed sheets, matching `main.py:147-148`).
+  /** `compile_all`'s per-workbook planning (`main.py:141-145`), shared
+    * with the `graft-sheet` source: year from the workbook's name, sheet
+    * name gate, recognisable header. Each kept sheet, with its name.
+    */
+  def recognisedSheets(workbook: String, sheets: Seq[(String, Seq[Seq[String]])])
+      : Seq[(String, SheetParser.Sheet)] = {
+    val year = LinkDiscovery.yearFromUrl(workbook)
+    for {
+      (name, grid) <- sheets
+      if sheetNameMatches(name)
+      (headerIdx, h) <- SheetParser.header(grid)
+    } yield name -> SheetParser.Sheet(grid, year, headerIdx, h)
+  }
+
+  /** The full `compile_all` lifecycle (`main.py:135-151`): fetch and
+    * decode every workbook URL, plan via [[recognisedSheets]], parse +
+    * union as [[SheetParser.compileAll]] does (raising on zero parsed
+    * sheets, `main.py:147-148`).
     */
   def compileWorkbooks(spark: SparkSession, urls: Seq[String],
                        fetcher: Fetcher,
-                       decoder: WorkbookDecoder): DataFrame = {
-    val sheets = for {
-      url <- urls
-      year = LinkDiscovery.yearFromUrl(url)
-      (name, grid) <- decoder.decode(fetcher.fetch(url))
-      if sheetNameMatches(name)
-    } yield (grid, year)
-    SheetParser.compileAll(spark, sheets)
-  }
+                       decoder: WorkbookDecoder): DataFrame =
+    SheetParser.toFrame(spark, urls.flatMap(url =>
+      recognisedSheets(url, decoder.decode(fetcher.fetch(url))).map(_._2)))
 }

@@ -1,22 +1,25 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
-import graft.ops.{CleanText, Reshape}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
+import org.apache.spark.sql.graft.CleanTextExpr
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+
+import graft.ops.CleanText
 
 /** Ingest layer (SURVEY §2.1 S1–S3, §2.2 P1–P7, §2.7 T6): the
   * `parse_sheet` semantics of `/root/reference/main.py:72-131` over a raw
-  * all-string grid.
+  * all-string grid — the one implementation both entry points use.
   *
   * Design split (SURVEY §7.3): header detection is ordinal — "first of the
   * top ≤40 rows with ≥2 state codes" (`main.py:48-53`) — which has no
-  * distributed meaning, so it runs driver-side over at most 40 rows. The
-  * *data* path (cleaning, coercion, melt) is a distributed DataFrame plan.
-  * A workbook sheet is small; at 100 TB the parallelism axis is
-  * *many sheets* — `compileAll` unions per-sheet plans lazily, so Spark
-  * schedules all sheets' scans concurrently.
+  * distributed meaning, so it runs driver-side over at most 40 rows
+  * ([[header]]). The data path ([[tidyRows]]) is a pure row function: the
+  * `graft-sheet` source runs it per sheet partition on executors, the
+  * distributed read; [[compileAll]] runs it driver-side over in-memory
+  * grids into a local DataFrame.
   */
 object SheetParser {
 
@@ -39,8 +42,8 @@ object SheetParser {
     * P3 positional unnamed→category/principal_diagnosis/dimension_i,
     * P4 drop `total`.
     */
-  private[graft] case class Header(colNames: Seq[String], idCols: Seq[String],
-                                    stateCols: Seq[String], keep: Seq[Int])
+  case class Header(colNames: Seq[String], idCols: Seq[String],
+                    stateCols: Seq[String], keep: Seq[Int])
 
   private[graft] def resolveHeader(cells: Seq[Any]): Header = {
     // pandas read_excel names empty header cells "Unnamed: <i>"
@@ -83,52 +86,83 @@ object SheetParser {
       keep = keepNoTotal.map(_._1))
   }
 
-  /** `parse_sheet` (`main.py:72-131`): raw grid → tidy long-form plan, or
-    * None when the sheet is unrecognizable (no header in 40 rows, <2 state
-    * columns, or no id columns — `main.py:75-76,115-116`).
-    *
-    * Null-semantics parity (pinned by golden tests): the reference's
-    * `_clean_text` does `astype(str)` first, so a *cell-level* missing id
-    * value becomes the literal string "nan" (`main.py:120-121`), while a
-    * *column-level* missing dimension (sheet lacks the column entirely)
-    * stays null after union and becomes "" at the clean aggregate.
+  /** T6 + P1–P4 + the recognisable-sheet guard (`main.py:75-76,115-116`):
+    * header row index and resolution, or None when the top 40 rows hold
+    * no header or it lacks 2 state columns or an id column.
     */
-  def parseSheet(spark: SparkSession, grid: Seq[Seq[String]], year: Int): Option[DataFrame] = {
-    headerRow(grid).flatMap { hdr =>
-      val h = resolveHeader(grid(hdr))
-      if (h.stateCols.size < 2 || h.idCols.isEmpty) None
-      else {
-        val dataRows = grid.drop(hdr + 1).map { r =>
-          Row.fromSeq(h.keep.map(i =>
-            r.lift(i).flatMap(Option(_)).filter(_.nonEmpty).orNull))
-        }
-        val schema = StructType(h.colNames.map(StructField(_, StringType, nullable = true)))
-        val raw = spark.createDataFrame(
-          spark.sparkContext.parallelize(dataRows.toList), schema)
+  def header(grid: Seq[Seq[String]]): Option[(Int, Header)] =
+    headerRow(grid).map(i => i -> resolveHeader(grid(i)))
+      .filter { case (_, h) => h.stateCols.size >= 2 && h.idCols.nonEmpty }
 
-        // P5: drop rows where the first id column is null (main.py:118)
-        val dropped = raw.na.drop(Seq(h.idCols.head))
-        // F1 (+ astype(str) "nan" parity) on id cols; P12 coercion on states
-        val cleaned = dropped.select(
-          h.idCols.map(c =>
-            when(col(c).isNull, lit("nan"))
-              .otherwise(CleanText.cleanText(col(c))).as(c)) ++
-          h.stateCols.map(c => CleanText.coerceDouble(col(c)).as(c)): _*)
-        // R1 melt + P7 year literal (main.py:126-130)
-        val tidy = Reshape
-          .melt(cleaned, h.idCols, h.stateCols, "state", "separations")
-          .withColumn("year", lit(year))
-        Some(tidy)
+  /** A recognisable sheet: its grid, the year its rows carry (P7), its [[header]]. */
+  case class Sheet(grid: Seq[Seq[String]], year: Int, headerIdx: Int, header: Header)
+
+  /** The tidy schema: every sheet's id columns in first-appearance order
+    * (null where a sheet lacks one), then `state`, `separations`, `year`.
+    */
+  def tidySchema(idCols: Seq[String]): StructType =
+    StructType(idCols.distinct.map(StructField(_, StringType)) ++ Seq(
+      StructField("state", StringType), StructField("separations", DoubleType),
+      StructField("year", IntegerType, nullable = false)))
+
+  /** `parse_sheet`'s data path (`main.py:117-130`) over one [[Sheet]]: P5
+    * drop rows whose first id cell is empty; F1 clean id cells, a missing
+    * one becoming the literal "nan" (the reference's `astype(str)`); P12
+    * coerce state cells like `pd.to_numeric(errors="coerce")`, NaN
+    * included; R1 melt dropping null separations; P7 the sheet's year.
+    * Each tidy row is laid out as `fields` (null for an id column this
+    * sheet lacks), strings encoded by `str`, so it wraps as a `Row` or an
+    * `InternalRow` as is.
+    */
+  def tidyRows(sheet: Sheet, fields: Seq[String],
+               str: String => AnyRef): Iterator[Array[Any]] = {
+    val h = sheet.header
+    val at = h.colNames.zip(h.keep).toMap
+    val (idAt, stateAt) = (h.idCols.map(at).toArray, h.stateCols.map(at).toArray)
+    val stateNames = h.stateCols.map(str).toArray
+    // a tidy row is built as ids ++ (state, separations, year, null);
+    // each output field picks one of those slots
+    val n = idAt.size
+    val slot = (h.idCols ++ Seq("state", "separations", "year")).zipWithIndex.toMap
+    val slots = fields.map(slot.getOrElse(_, n + 3)).toArray
+    def cell(r: Seq[String], i: Int): String =
+      if (i < r.length && r(i) != null && r(i).nonEmpty) r(i) else null
+    def coerce(s: String): java.lang.Double =
+      try { val d = s.trim.toDouble; if (d.isNaN) null else Double.box(d) }
+      catch { case _: NumberFormatException => null }
+    sheet.grid.iterator.drop(sheet.headerIdx + 1)
+      .filter(cell(_, idAt.head) != null) // P5
+      .flatMap { r =>
+        val vals = new Array[Any](n + 4)
+        idAt.indices.foreach { k =>
+          val v = cell(r, idAt(k))
+          vals(k) = str(if (v == null) "nan" else CleanTextExpr.clean(v))
+        }
+        vals(n + 2) = sheet.year
+        stateAt.indices.iterator.flatMap { k =>
+          val v = cell(r, stateAt(k))
+          vals(n + 1) = if (v == null) null else coerce(v)
+          vals(n) = stateNames(k)
+          if (vals(n + 1) == null) None else Some(slots.map(vals(_)))
+        }
       }
-    }
   }
 
-  /** `compile_all` (`main.py:135-151`): parse every (grid, year), skip
-    * unrecognizable sheets, U1-union the rest; error if none parsed
+  /** `compile_all`'s parse + union (`main.py:135-151`): every recognisable
+    * (grid, year) as tidy rows in [[tidySchema]]; error if none
     * (`main.py:147-148`).
     */
-  def compileAll(spark: SparkSession, sheets: Seq[(Seq[Seq[String]], Int)]): DataFrame = {
-    val frames = sheets.flatMap { case (g, y) => parseSheet(spark, g, y) }
-    Reshape.unionAligned(frames)
+  def compileAll(spark: SparkSession, sheets: Seq[(Seq[Seq[String]], Int)]): DataFrame =
+    toFrame(spark, for {
+      (grid, year) <- sheets
+      (headerIdx, h) <- header(grid)
+    } yield Sheet(grid, year, headerIdx, h))
+
+  /** Recognisable sheets → one local DataFrame of their tidy rows. */
+  private[ingest] def toFrame(spark: SparkSession, sheets: Seq[Sheet]): DataFrame = {
+    require(sheets.nonEmpty, "no frames parsed") // main.py:147-148
+    val schema = tidySchema(sheets.flatMap(_.header.idCols))
+    val rows = sheets.flatMap(tidyRows(_, schema.fieldNames.toSeq, identity))
+    spark.createDataFrame(rows.map(new GenericRow(_): Row).asJava, schema)
   }
 }

@@ -1,7 +1,6 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** Sources & sinks (SURVEY §2.1 S4–S7).
   *
@@ -81,13 +80,6 @@ object Tables {
     val manifest = ZoneMap.buildManifest(df.sparkSession, path, sortCols)
     ZoneMap.commitManifest(manifest, s"$dir/$name.manifest")
   }
-
-  /** S6: memoized scan — the dashboard's `@st.cache_data`
-    * (`streamlit_app.py:26-27`) becomes a persisted DataFrame: first action
-    * materializes, later chart jobs reuse the cached columnar batches.
-    */
-  def loadCached(spark: SparkSession, dir: String, name: String): DataFrame =
-    load(spark, dir, name).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** S7: fallback-scan control flow (`streamlit_app.py:31-37`): if the
     * primary relation is empty, derive it from the fallback plan instead.

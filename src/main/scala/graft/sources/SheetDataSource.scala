@@ -2,22 +2,19 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.graft.CleanTextExpr
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ingest.{Ingest, LinkDiscovery, SheetParser}
+import graft.ingest.{Ingest, SheetParser}
 
 /** DataSource V2 for the reference's workbook ingest (S1–S3 as a
   * first-class Spark source): `spark.read.format("graft-sheet").load(dir)`
@@ -26,31 +23,37 @@ import graft.ingest.{Ingest, LinkDiscovery, SheetParser}
   * text stand-ins, dispatched per file by extension.
   *
   * Division of labor at scale:
-  *  - the DRIVER plans: list workbooks, decode only enough of each to
-  *    gate sheet names (`Table\s*[45S]`, main.py:143), resolve headers
-  *    (driver-side by nature — ordinal scan of ≤40 rows, SURVEY §7.3),
-  *    derive the year from the file name (main.py:141-142), and emit one
-  *    [[SheetPartition]] per recognizable sheet;
-  *  - EXECUTORS read: each partition re-reads its workbook, parses its
-  *    sheet and melts it to tidy rows — so a crawl of 10^5 workbooks
-  *    fans out to 10^5 independent partitions with no driver data motion.
+  *  - the DRIVER plans once per `load()`: list and decode workbooks,
+  *    one [[SheetPartition]] per sheet [[Ingest.recognisedSheets]] keeps
+  *    (name gate, year from the file name, recognisable header);
+  *  - EXECUTORS read: each partition re-reads its workbook and runs
+  *    [[SheetParser.tidyRows]] over its sheet — so a crawl of 10^5
+  *    workbooks fans out to 10^5 independent partitions with no driver
+  *    data motion.
   *
   * Pushdown: required-column pruning projects rows before they leave the
   * reader; filters on `year` — a per-partition constant known at planning
   * — prune whole partitions and are reported as fully pushed.
   *
-  * The unified output schema is the same union-by-name contract as
-  * [[SheetParser.compileAll]]: all id columns seen across sheets
-  * (string, null where a sheet lacks the column), then
-  * `state`/`separations`/`year`.
+  * The output schema is [[SheetParser.tidySchema]], the one
+  * [[SheetParser.compileAll]] produces: all id columns seen across
+  * sheets in first-appearance order (string, null where a sheet lacks
+  * the column), then `state`/`separations`/`year`.
   */
 class SheetDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
 
   override def shortName(): String = "graft-sheet"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SheetPlanning.plan(options.get("path"))._1
+  // one provider instance serves one load(): getTable reuses the plan
+  // inferSchema built, so the driver decodes each workbook once
+  private var inferred: Option[Seq[SheetPartition]] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val (schema, parts) = SheetPlanning.plan(options.get("path"))
+    inferred = Some(parts)
+    schema
+  }
 
   // a user-supplied .schema(...) skips the driver-side inference pass —
   // at crawl scale (10^5 workbooks) inference reads every workbook once
@@ -58,16 +61,18 @@ class SheetDataSource extends TableProvider
   override def supportsExternalMetadata(): Boolean = true
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new SheetTable(schema, properties.get("path"))
+                        properties: JMap[String, String]): Table = {
+    val (path, known) = (properties.get("path"), inferred)
+    new SheetTable(schema, path, known.getOrElse(SheetPlanning.plan(path)._2))
+  }
 }
 
-private[sources] class SheetTable(schema: StructType, path: String)
+private[sources] class SheetTable(schema: StructType, path: String,
+                                  plan: => Seq[SheetPartition])
     extends Table with SupportsRead {
-  // one planning pass per Table instance: every scan/action over this
-  // load() reuses the partition list instead of re-reading the crawl
-  private lazy val planned: Seq[SheetPartition] =
-    SheetPlanning.plan(path)._2
+  // planned at most once (at the first scan when the schema was supplied):
+  // every scan/action over this load() reuses the partition list
+  private lazy val planned: Seq[SheetPartition] = plan
   override def name(): String = s"graft-sheet `$path`"
   override def schema(): StructType = schema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -79,8 +84,7 @@ private[sources] class SheetTable(schema: StructType, path: String)
 /** One recognizable sheet of one workbook — the unit of parallelism. */
 private[sources] case class SheetPartition(
     path: String, sheet: String, year: Int, headerIdx: Int,
-    colNames: Seq[String], idCols: Seq[String], stateCols: Seq[String],
-    keep: Seq[Int]) extends InputPartition
+    header: SheetParser.Header) extends InputPartition
 
 private[sources] object SheetPlanning {
 
@@ -95,15 +99,8 @@ private[sources] object SheetPlanning {
     else TextWorkbook.decode(bytes)
 
   def readBytes(p: Path, conf: Configuration): Array[Byte] = {
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
+    val in = p.getFileSystem(conf).open(p)
+    try in.readAllBytes() finally in.close()
   }
 
   /** Driver-side planning pass: unified schema + one partition per
@@ -117,21 +114,11 @@ private[sources] object SheetPlanning {
       .sortBy(_.getName)
     val parts = for {
       f <- files.toSeq
-      year = LinkDiscovery.yearFromUrl(f.getName)
-      (name, grid) <- decodeWorkbook(f.getName, readBytes(f, conf))
-      if Ingest.sheetNameMatches(name)
-      hdrIdx <- SheetParser.headerRow(grid)
-      h = SheetParser.resolveHeader(grid(hdrIdx))
-      if h.stateCols.size >= 2 && h.idCols.nonEmpty
-    } yield SheetPartition(f.toString, name, year, hdrIdx,
-      h.colNames, h.idCols, h.stateCols, h.keep)
-    val idCols = parts.flatMap(_.idCols).distinct
-    val schema = StructType(
-      idCols.map(StructField(_, StringType, nullable = true)) ++
-        Seq(StructField("state", StringType, nullable = true),
-          StructField("separations", DoubleType, nullable = true),
-          StructField("year", IntegerType, nullable = false)))
-    (schema, parts)
+      (name, sheet) <- Ingest.recognisedSheets(f.getName,
+        decodeWorkbook(f.getName, readBytes(f, conf)))
+    } yield SheetPartition(f.toString, name, sheet.year, sheet.headerIdx,
+      sheet.header)
+    (SheetParser.tidySchema(parts.flatMap(_.header.idCols)), parts)
   }
 }
 
@@ -191,19 +178,12 @@ private[sources] class SheetReaderFactory(required: StructType)
     new SheetPartitionReader(p.asInstanceOf[SheetPartition], required)
 }
 
-/** Executor-side: re-read the workbook, parse this sheet, melt to tidy
-  * rows — the row-level mirror of [[SheetParser.parseSheet]]'s
-  * DataFrame plan (P5 first-id-null drop, F1 clean + "nan" parity, P12
-  * coerce, R1 melt, P7 year literal), projected to the required schema.
+/** Executor-side: re-read the workbook and run [[SheetParser.tidyRows]]
+  * over this sheet, laid out as the required schema.
   */
 private[sources] class SheetPartitionReader(
     p: SheetPartition, required: StructType)
     extends PartitionReader[InternalRow] {
-
-  private def coerce(s: String): Any =
-    if (s == null) null
-    else try java.lang.Double.valueOf(s.trim.toDouble)
-    catch { case _: NumberFormatException => null }
 
   private val rows: Iterator[InternalRow] = {
     val grid = SheetPlanning
@@ -211,35 +191,12 @@ private[sources] class SheetPartitionReader(
         SheetPlanning.readBytes(new Path(p.path), new Configuration()))
       .collectFirst { case (n, g) if n == p.sheet => g }
       .getOrElse(Seq.empty)
-    val byName = p.colNames.zip(p.keep).toMap
-    val fields = required.fields.map(_.name)
-    grid.drop(p.headerIdx + 1).iterator.flatMap { raw =>
-      def cell(name: String): String = byName.get(name)
-        .flatMap(i => raw.lift(i)).flatMap(Option(_))
-        .filter(_.nonEmpty).orNull
-      if (cell(p.idCols.head) == null) Iterator.empty // P5
-      else {
-        val cleanedIds: Map[String, String] = p.idCols.map { c =>
-          val v = cell(c)
-          c -> (if (v == null) "nan" else CleanTextExpr.clean(v))
-        }.toMap
-        // null separations are dropped post-melt (main.py:128) — a row
-        // SEMANTIC, so it applies even when the column is pruned away
-        p.stateCols.iterator
-          .map(st => st -> coerce(cell(st)))
-          .filter(_._2 != null)
-          .map { case (st, sep) =>
-            new GenericInternalRow(fields.map {
-              case "state" => UTF8String.fromString(st)
-              case "separations" => sep
-              case "year" => p.year
-              case id if cleanedIds.contains(id) =>
-                UTF8String.fromString(cleanedIds(id))
-              case _ => null // id column from another sheet
-            }.asInstanceOf[Array[Any]])
-          }
-      }
-    }
+    // null separations drop inside tidyRows (main.py:128) — a row
+    // SEMANTIC, so it applies even when the column is pruned away
+    SheetParser.tidyRows(
+      SheetParser.Sheet(grid, p.year, p.headerIdx, p.header),
+      required.fieldNames.toSeq, UTF8String.fromString)
+      .map(new GenericInternalRow(_))
   }
 
   private var current: InternalRow = _

@@ -34,9 +34,9 @@ import graft.ingest.WorkbookDecoder
   *
   * Encode writes a minimal valid workbook (shared-strings table, A1
   * refs, nulls skipped so they round-trip as gaps) — the test fixture
-  * generator, and a usable export sink. Driver-side by design: workbook
-  * decode happens once per file on the driver (a handful of workbooks);
-  * the distributed axis starts at SheetParser.compileAll.
+  * generator, and a usable export sink. Each `graft-sheet` load decodes
+  * a workbook once on the driver to plan it and once more in each of its
+  * sheet partitions on the executors, which do the parse.
   */
 object XlsxWorkbook extends WorkbookDecoder {
 

@@ -5,7 +5,7 @@ import graft.Pipeline
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end fixtures (FIXTURES.md §A): AIHW-shaped raw grids
-  * pushed through parseSheet/compileAll/runEtl, asserting tidy and clean
+  * pushed through compileAll/runEtl, asserting tidy and clean
   * outputs row-for-row against hand-traced reference semantics.
   */
 class SheetParserSpec extends SparkTestBase {
@@ -36,8 +36,8 @@ class SheetParserSpec extends SparkTestBase {
     assert(h.keep == Seq(0, 1, 2, 3)) // total (4) and dup NSW (5) dropped
   }
 
-  test("parseSheet golden: tidy rows match hand-traced reference semantics") {
-    val tidy = SheetParser.parseSheet(spark, grid, 2023).get
+  test("compileAll golden: tidy rows match hand-traced reference semantics") {
+    val tidy = SheetParser.compileAll(spark, Seq((grid, 2023)))
     assert(tidy.columns.toSeq ==
       Seq("category", "principal_diagnosis", "state", "separations", "year"))
     val got = tidy.orderBy("category", "state").collect()
@@ -52,12 +52,22 @@ class SheetParserSpec extends SparkTestBase {
       ("Mental health", "F00-F99", "VIC", 5.0, 2023)))
   }
 
-  test("parseSheet guards: <2 states or no id cols → None") {
+  test("header guards: <2 states or no id cols → None") {
+    assert(SheetParser.header(grid).map(_._1).contains(2))
     val oneState = Seq(Seq("cat", "NSW"), Seq("x", "1"))
-    assert(SheetParser.parseSheet(spark, oneState, 2023).isEmpty)
+    assert(SheetParser.header(oneState).isEmpty)
     val noIds = Seq(Seq("NSW", "VIC"), Seq("1", "2"))
-    assert(SheetParser.parseSheet(spark, noIds, 2023).isEmpty)
-    assert(SheetParser.parseSheet(spark, Seq.fill(45)(Seq("a", "b")), 2023).isEmpty)
+    assert(SheetParser.header(noIds).isEmpty)
+    val noHeader = Seq.fill(45)(Seq("a", "b"))
+    assert(SheetParser.header(noHeader).isEmpty)
+    // compileAll skips every such sheet, and raises when none is left
+    // (main.py:147-148)
+    assert(SheetParser.compileAll(spark,
+      Seq((oneState, 2023), (grid, 2023))).count() == 3)
+    intercept[IllegalArgumentException] {
+      SheetParser.compileAll(spark,
+        Seq((oneState, 2023), (noIds, 2023), (noHeader, 2023)))
+    }
   }
 
   test("compileAll + runEtl golden: union null-fill, clean aggregate invariant") {
@@ -67,9 +77,11 @@ class SheetParserSpec extends SparkTestBase {
       Seq("Mental health", "Acute", "10", "20"),
       Seq("Mental health", "Acute", "1", "2"))
     val tidy = SheetParser.compileAll(spark, Seq((grid, 2023), (grid2, 2024)))
+    // one schema rule with the graft-sheet source: every id column in
+    // first-appearance order, then state, separations, year
     assert(tidy.columns.toSeq ==
-      Seq("category", "principal_diagnosis", "state", "separations", "year",
-          "care_type"))
+      Seq("category", "principal_diagnosis", "care_type", "state",
+          "separations", "year"))
     // column-level missing dims are null after union
     assert(tidy.filter(col("year") === 2024 &&
       col("principal_diagnosis").isNull).count() == 4)
@@ -90,7 +102,7 @@ class SheetParserSpec extends SparkTestBase {
 
   test("S7 fallback: empty clean → re-aggregate staging") {
     val out = java.nio.file.Files.createTempDirectory("etl2").toString
-    val tidy = SheetParser.parseSheet(spark, grid, 2023).get
+    val tidy = SheetParser.compileAll(spark, Seq((grid, 2023)))
     graft.io.Tables.save(tidy, out, "staging_admissions")
     graft.io.Tables.save(tidy.limit(0), out, "clean_admissions")
     val loaded = Pipeline.loadForDashboard(spark, out)

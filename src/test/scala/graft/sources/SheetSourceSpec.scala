@@ -1,16 +1,16 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import graft.SparkTestBase
-import graft.ingest.{Fetcher, Ingest}
-import org.apache.spark.sql.functions._
+import graft.ingest.{Fetcher, Ingest, SheetParser}
 import org.apache.spark.sql.types.StructType
 
 /** DataSource V2 source: the workbook-directory read must (1) equal the
-  * seam-based `compileWorkbooks` lifecycle row-for-row, (2) prune
-  * columns at the scan, (3) prune whole sheet partitions on pushed
-  * `year` filters.
+  * seam-based `compileWorkbooks` lifecycle row-for-row and column-for-
+  * column, (2) prune columns at the scan, (3) prune whole sheet
+  * partitions on pushed `year` filters, (4) plan once per `load()`.
   */
 class SheetSourceSpec extends SparkTestBase {
 
@@ -52,22 +52,20 @@ class SheetSourceSpec extends SparkTestBase {
       def fetch(url: String): Array[Byte] = Files.readAllBytes(
         java.nio.file.Paths.get(url.stripPrefix("file:")))
     }
-    val expected = graft.ops.Reshape.unionAligned(Seq(
-      Ingest.compileWorkbooks(spark, Seq(s"$dir/apc-2022-23-tables-access.txt"),
-        fileFetcher, TextWorkbook),
-      Ingest.compileWorkbooks(spark, Seq(s"$dir/apc-2023-24-tables-access.txt"),
-        fileFetcher, TextWorkbook)))
-    val cols = expected.columns.sorted.toSeq
+    val expected = Ingest.compileWorkbooks(spark,
+      Seq(s"$dir/apc-2022-23-tables-access.txt",
+        s"$dir/apc-2023-24-tables-access.txt"),
+      fileFetcher, TextWorkbook)
+    // one schema rule: same columns in the same order, same types
+    assert(ds.schema == expected.schema, ds.schema.treeString)
     def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(col): _*).collect()
-        .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
-    assert(ds.columns.sorted.toSeq == cols, ds.columns.toSeq)
+      df.collect().map(_.toSeq.map(String.valueOf))
+        .sortBy(_.mkString("|")).toSeq
     assert(canon(ds) == canon(expected))
   }
 
   test("a REAL .xlsx workbook in the directory reads identically to " +
     "its text-encoded twin (decode dispatch by extension)") {
-    import java.nio.charset.StandardCharsets.UTF_8
     val d = Files.createTempDirectory("sheets_xlsx")
     // same content, two encodings, two years so rows stay distinct
     Files.writeString(d.resolve("apc-2022-23-tables-access.txt"), wb2023)
@@ -93,6 +91,24 @@ class SheetSourceSpec extends SparkTestBase {
     val pd = ds.filter($"year" === 2023 && $"principal_diagnosis".isNotNull)
       .select("principal_diagnosis").distinct().as[String].collect().toSeq
     assert(pd == Seq("Burns"), "second sheet's extra id column unioned in")
+  }
+
+  test("NaN cells are missing in compileAll and graft-sheet alike") {
+    // pd.to_numeric turns NaN/nan into NaN and dropna removes the row
+    // (main.py:123-129), like the unparseable n.p. and 1,234
+    val wb = sheet("Table 4", Seq(
+      "cat\tNSW\tVIC\tQLD\tSA\tWA",
+      "Injury\tNaN\tnan\tn.p.\t1,234\t5"))
+    val d = Files.createTempDirectory("sheets_nan")
+    Files.writeString(d.resolve("apc-2022-23-tables-access.txt"), wb)
+    val viaSource = spark.read.format("graft-sheet").load(d.toString)
+    val viaCompile = SheetParser.compileAll(spark,
+      TextWorkbook.decode(wb.getBytes(UTF_8)).map { case (_, g) => (g, 2023) })
+    for (df <- Seq(viaSource, viaCompile)) {
+      val got = df.select("cat", "state", "separations", "year")
+        .as[(String, String, Double, Int)].collect().toSeq
+      assert(got == Seq(("Injury", "WA", 5.0, 2023)), got.toString)
+    }
   }
 
   test("column pruning reaches the scan") {
@@ -122,6 +138,20 @@ class SheetSourceSpec extends SparkTestBase {
     assert(ds.filter($"year" === 1900).count() == 0)
     assert(ds.schema == spark.read.format("graft-sheet").load(dir).schema)
     assert(ds.schema.isInstanceOf[StructType])
+  }
+
+  test("load() plans once: scans reuse the plan schema inference built") {
+    val d = Files.createTempDirectory("sheets_once")
+    Files.writeString(d.resolve("apc-2022-23-tables-access.txt"), wb2023)
+    val inferred = spark.read.format("graft-sheet").load(d.toString)
+    val supplied = spark.read.format("graft-sheet")
+      .schema(inferred.schema).load(d.toString)
+    // a workbook written after load(): the inferring load scans the plan
+    // it already built, a user-schema load plans at its first scan
+    Files.writeString(d.resolve("apc-2023-24-tables-access.txt"), wb2024)
+    assert(inferred.filter($"year" === 2024).count() == 0)
+    assert(inferred.count() == 6)
+    assert(supplied.filter($"year" === 2024).count() == 2)
   }
 
   test("user-supplied schema skips inference and projects by name") {
