@@ -86,7 +86,7 @@ object Retrieval {
     // CONSUMERS (x_retrieval_mrr / x_ndcg / x_hybrid_rrf) reference
     // the scored-topk subtree more than once per action, so without
     // the barrier the vocabulary aggregate re-runs inside one action.
-    // QBench --cold (fresh session, FIRST action timed — no warm run
+    // Cold timing (fresh session, FIRST action timed — no warm run
     // to hide behind): with barrier 2.17/1.44/1.34/1.44 s, without
     // 2.40/1.58/1.52/1.93 s across bm25_topk/mrr/ndcg/rrf — the
     // barrier wins COLD, i.e. it kills intra-action recomputation

@@ -290,7 +290,7 @@ object Similarity {
       // ATTRIBUTES below the explode. The single-Column form inlines a
       // full copy of the array_sort margin subtree into every probe
       // entry — a ~4600-node expression tree that cost 0.35-0.5 s PER
-      // ACTION in the Catalyst optimizer (measured r15, graft.PlanTime;
+      // ACTION in the Catalyst optimizer (measured by timing planning alone;
       // guide §7.3 "planning time itself can become the bottleneck").
       // Attribute references shrink the tree ~4x with bit-identical
       // probe buckets (same expressions, evaluated once per table).

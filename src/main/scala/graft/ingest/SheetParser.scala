@@ -105,6 +105,25 @@ object SheetParser {
       StructField("state", StringType), StructField("separations", DoubleType),
       StructField("year", IntegerType, nullable = false)))
 
+  private val DecimalText = java.util.regex.Pattern.compile(
+    "[ \\t\\n\\x0B\\f\\r]*[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?[ \\t\\n\\x0B\\f\\r]*")
+  private val InfText = java.util.regex.Pattern.compile(
+    "[+-]?inf(inity)?", java.util.regex.Pattern.CASE_INSENSITIVE)
+
+  /** P12 for one cell, as `pd.to_numeric(errors="coerce")` (pandas 2.2)
+    * reads it, with NaN as missing: a decimal or exponent form, with
+    * surrounding ASCII whitespace, parses unless it overflows; `inf` and
+    * `infinity` in any case, signed and unpadded, are ±inf; anything else
+    * (`NaN`, `n.p.`, `1,234`, Java's `1d` and hex floats) is null.
+    */
+  private def toNumeric(s: String): java.lang.Double =
+    if (DecimalText.matcher(s).matches()) {
+      val d = s.trim.toDouble
+      if (d.isInfinite) null else Double.box(d)
+    } else if (InfText.matcher(s).matches())
+      Double.box(if (s.charAt(0) == '-') Double.NegativeInfinity else Double.PositiveInfinity)
+    else null
+
   /** `parse_sheet`'s data path (`main.py:117-130`) over one [[Sheet]]: P5
     * drop rows whose first id cell is empty; F1 clean id cells, a missing
     * one becoming the literal "nan" (the reference's `astype(str)`); P12
@@ -127,9 +146,6 @@ object SheetParser {
     val slots = fields.map(slot.getOrElse(_, n + 3)).toArray
     def cell(r: Seq[String], i: Int): String =
       if (i < r.length && r(i) != null && r(i).nonEmpty) r(i) else null
-    def coerce(s: String): java.lang.Double =
-      try { val d = s.trim.toDouble; if (d.isNaN) null else Double.box(d) }
-      catch { case _: NumberFormatException => null }
     sheet.grid.iterator.drop(sheet.headerIdx + 1)
       .filter(cell(_, idAt.head) != null) // P5
       .flatMap { r =>
@@ -141,7 +157,7 @@ object SheetParser {
         vals(n + 2) = sheet.year
         stateAt.indices.iterator.flatMap { k =>
           val v = cell(r, stateAt(k))
-          vals(n + 1) = if (v == null) null else coerce(v)
+          vals(n + 1) = if (v == null) null else toNumeric(v)
           vals(n) = stateNames(k)
           if (vals(n + 1) == null) None else Some(slots.map(vals(_)))
         }

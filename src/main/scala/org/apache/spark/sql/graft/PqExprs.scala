@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * bottleneck — not at execution but at PLANNING: constraint
   * propagation (PruneFilters et al.) re-canonicalizes every Project
   * alias's full subtree per rule iteration, measured at 2.4-3 s per
-  * action for x_ann_pq_topk's ~2000-node tree (graft.PlanTime,
+  * action for x_ann_pq_topk's ~2000-node tree (planning timed alone,
   * RuleExecutor dump; guide §7.3 "planning time itself can become the
   * bottleneck"). These expressions carry the codebook as a PARAMETER —
   * one plan node, zero planning blow-up — and run the m x |codebook|

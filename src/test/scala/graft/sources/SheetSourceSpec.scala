@@ -95,10 +95,25 @@ class SheetSourceSpec extends SparkTestBase {
 
   test("NaN cells are missing in compileAll and graft-sheet alike") {
     // pd.to_numeric turns NaN/nan into NaN and dropna removes the row
-    // (main.py:123-129), like the unparseable n.p. and 1,234
+    // (main.py:123-129), like the unparseable n.p. and 1,234. The edge
+    // rows put one NSW cell each through the same coercion; the expected
+    // values are what pandas 2.2.2 gives: inf spellings stay ±inf, Java's
+    // type suffixes and hex floats are not numbers, overflow is NaN
+    val inf = Double.PositiveInfinity
+    val edges = Seq(
+      "inf" -> Some(inf), "+inf" -> Some(inf), "-inf" -> Some(-inf),
+      "INF" -> Some(inf), "infinity" -> Some(inf), "-Infinity" -> Some(-inf),
+      "1d" -> None, "1f" -> None, "0x1p3" -> None, "1e400" -> None,
+      "NaN" -> None, "nan" -> None, "n.p." -> None, "1,234" -> None,
+      "1\u00a0234" -> None, ".5" -> Some(0.5), "5." -> Some(5.0),
+      "+5" -> Some(5.0), "1.5E-3" -> Some(0.0015))
     val wb = sheet("Table 4", Seq(
       "cat\tNSW\tVIC\tQLD\tSA\tWA",
-      "Injury\tNaN\tnan\tn.p.\t1,234\t5"))
+      "Injury\tNaN\tnan\tn.p.\t1,234\t5") ++
+      edges.indices.map(i => s"e$i\t${edges(i)._1}\t\t\t\t"))
+    val want = (("Injury", "WA", 5.0, 2023) +: edges.indices.collect {
+      case i if edges(i)._2.nonEmpty => (s"e$i", "NSW", edges(i)._2.get, 2023)
+    }).sortBy(_._1)
     val d = Files.createTempDirectory("sheets_nan")
     Files.writeString(d.resolve("apc-2022-23-tables-access.txt"), wb)
     val viaSource = spark.read.format("graft-sheet").load(d.toString)
@@ -106,8 +121,8 @@ class SheetSourceSpec extends SparkTestBase {
       TextWorkbook.decode(wb.getBytes(UTF_8)).map { case (_, g) => (g, 2023) })
     for (df <- Seq(viaSource, viaCompile)) {
       val got = df.select("cat", "state", "separations", "year")
-        .as[(String, String, Double, Int)].collect().toSeq
-      assert(got == Seq(("Injury", "WA", 5.0, 2023)), got.toString)
+        .as[(String, String, Double, Int)].collect().toSeq.sortBy(_._1)
+      assert(got == want, got.toString)
     }
   }
 
