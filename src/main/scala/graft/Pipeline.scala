@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 import graft.io.Tables
 import graft.ops.{CleanText, Tidy}
@@ -9,8 +10,10 @@ import graft.ops.{CleanText, Tidy}
 /** End-to-end ETL + dashboard-load composition (SURVEY §3.1/§3.2).
   *
   * `runEtl` = the reference's `load()` (`/root/reference/main.py:155-165`):
-  * write staging, derive clean via A9 dim-selection + P8 null-fill + A1
-  * group-sum, write clean. `loadForDashboard` = `load_data()`
+  * write staging, derive clean from the staged rows via A9 dim-selection +
+  * P8 null-fill + A1 group-sum, write clean. Like the reference, clean is
+  * aggregated from what staging holds, so the source is scanned once.
+  * `loadForDashboard` = `load_data()`
   * (`/root/reference/streamlit_app.py:26-50`): scan clean, fall back to
   * re-aggregating staging, compat renames, coercions, final dropna.
   */
@@ -19,10 +22,11 @@ object Pipeline {
   /** `load()` — staging + clean writes. Returns (staging, clean) plans. */
   def runEtl(tidy: DataFrame, outDir: String): (DataFrame, DataFrame) = {
     Tables.save(tidy, outDir, "staging_admissions")
-    val dims = Tidy.nonEmptyDimensions(tidy, Tidy.dimensions(tidy))
-    val clean = Tidy.cleanAggregate(tidy, dims)
+    val staged = Tables.load(tidy.sparkSession, outDir, "staging_admissions")
+    val dims = Tidy.nonEmptyDimensions(staged, Tidy.dimensions(staged))
+    val clean = Tidy.cleanAggregate(staged, dims)
     Tables.save(clean, outDir, "clean_admissions")
-    (tidy, clean)
+    (staged, clean)
   }
 
   /** P11 (`streamlit_app.py:39-44`): compat renames applied only when the
@@ -38,7 +42,11 @@ object Pipeline {
     }
   }
 
-  /** `load_data()` — S5 scan → S7 fallback(A1) → P11 → P12 casts → P6. */
+  /** `load_data()` — S5 scan → S7 fallback(A1) → P11 → P12 casts → P6.
+    * A P12 cast goes through a string (`CleanText.coerce*`), so a column
+    * already of the target type is left as it is: the cast is the
+    * identity there, NaN and -0.0 included.
+    */
   def loadForDashboard(spark: SparkSession, dir: String): DataFrame = {
     val primary = Tables.load(spark, dir, "clean_admissions")
     val df = Tables.withFallback(primary) {
@@ -46,10 +54,10 @@ object Pipeline {
       Tidy.cleanAggregate(staging,
         Tidy.nonEmptyDimensions(staging, Tidy.dimensions(staging)))
     }
-    val renamed = compatRenames(df)
-    renamed
-      .withColumn("year", CleanText.coerceInt(col("year")))
-      .withColumn("separations", CleanText.coerceDouble(col("separations")))
-      .na.drop(Seq("year", "state", "separations"))
+    def coerce(d: DataFrame, c: String, to: DataType, f: Column => Column) =
+      if (d.select(c).schema.head.dataType == to) d else d.withColumn(c, f(col(c)))
+    val typed = coerce(coerce(compatRenames(df), "year", IntegerType, CleanText.coerceInt),
+      "separations", DoubleType, CleanText.coerceDouble)
+    typed.na.drop(Seq("year", "state", "separations"))
   }
 }

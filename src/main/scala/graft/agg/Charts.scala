@@ -12,24 +12,31 @@ import graft.ops.Reshape
   * are tiny (≤ cardinality of the grouped dims), so `collect()` on them is
   * driver-safe at any input scale.
   *
-  * Sort discipline: every query that feeds a deterministic comparison ends
-  * in an explicit orderBy with a total ordering (ties broken by key).
+  * Sort discipline: every chart ends in an explicit total ordering (ties
+  * broken by key). A chart's rows are a tiny aggregate, so it is sorted in
+  * one partition ([[sorted]]), not by `orderBy`: a global sort plans a
+  * range exchange whose sampling is a Spark job of its own.
   */
 object Charts {
 
   private def sumMeasure(measure: String): Column =
     sum(col(measure)).as(measure)
 
+  /** A tiny aggregate ordered by `keys` (ascending, nulls first) in one
+    * partition: the same rows in the same order as `orderBy(keys)`.
+    */
+  private def sorted(df: DataFrame, keys: String*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(keys.map(col): _*)
+
   /** A2: totals by one dimension (bar chart, `streamlit_app.py:112`). */
   def totalsBy(df: DataFrame, key: String, measure: String): DataFrame =
-    df.groupBy(col(key)).agg(sumMeasure(measure)).orderBy(col(key))
+    sorted(df.groupBy(col(key)).agg(sumMeasure(measure)), key)
 
   /** A3/A5: totals by two dimensions (trend lines `streamlit_app.py:120`,
     * heatmap input `streamlit_app.py:138`).
     */
   def totalsBy2(df: DataFrame, k1: String, k2: String, measure: String): DataFrame =
-    df.groupBy(col(k1), col(k2)).agg(sumMeasure(measure))
-      .orderBy(col(k1), col(k2))
+    sorted(df.groupBy(col(k1), col(k2)).agg(sumMeasure(measure)), k1, k2)
 
   /** T1/T2: top-k groups by summed measure (pie `streamlit_app.py:129`,
     * top-state insight `streamlit_app.py:82-84`). Catalyst plans
@@ -42,44 +49,24 @@ object Charts {
       .orderBy(col(measure).desc, col(key))
       .limit(k)
 
-  /** R2: heatmap matrix (`streamlit_app.py:139`) — pivot with explicit
-    * state list, skipping the distinct pre-job.
+  /** R2: heatmap matrix (`streamlit_app.py:139`) — one aggregate over the
+    * explicit state list ([[Reshape.pivotSum]]).
     */
   def heatmap(df: DataFrame, index: String, pivotCol: String,
               pivotValues: Seq[String], measure: String): DataFrame =
-    Reshape.pivotSum(df, Seq(index), pivotCol, pivotValues, measure)
-      .orderBy(col(index))
+    sorted(Reshape.pivotSum(df, Seq(index), pivotCol, pivotValues, measure), index)
 
   /** A7: sorted distinct non-null values of a column — the sidebar filter
     * domain (`streamlit_app.py:57,60,68`).
     */
   def distinctDomain(df: DataFrame, c: String): DataFrame =
-    df.select(col(c)).na.drop().distinct().orderBy(col(c))
+    sorted(df.select(col(c)).na.drop().distinct(), c)
 
   /** A8: distinct-count gate (`streamlit_app.py:69,98`). Exact here;
     * `approx_count_distinct` is the 100 TB variant when ±2% is fine.
     */
   def distinctCount(df: DataFrame, c: String): Long =
     df.agg(countDistinct(col(c))).head().getLong(0)
-
-  /** T4: first-vs-last-year percent change (`streamlit_app.py:99-102`).
-    * The reference sorts by year and takes positional first/last; the
-    * distributed re-expression is min/max-by over a single aggregate —
-    * one pass, no sort, no window.
-    */
-  def yoyChange(df: DataFrame, yearCol: String, measure: String): DataFrame = {
-    val byYear = df.groupBy(col(yearCol)).agg(sumMeasure(measure))
-    byYear.agg(
-      min_by(col(measure), col(yearCol)).as("first_total"),
-      max_by(col(measure), col(yearCol)).as("last_total"),
-      min(col(yearCol)).as("first_year"),
-      max(col(yearCol)).as("last_year")
-    ).select(
-      col("first_year"), col("last_year"),
-      ((col("last_total") - col("first_total")) / col("first_total") * 100)
-        .as("pct_change")
-    )
-  }
 
   /** T5: head/preview (`streamlit_app.py:167`) — deterministic variant:
     * order by key then limit.

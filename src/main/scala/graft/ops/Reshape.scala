@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * not-null filter on the value column (codegen'd, fused into the same
   * stage — no extra pass over the data).
   *
-  * R2 pivot: `/root/reference/streamlit_app.py:139`. We always pass the
-  * explicit value list so Spark skips the extra distinct-collect job — at
-  * 100 TB that pre-job is a full scan; with values supplied the pivot is a
-  * single hash aggregate.
+  * R2 pivot: `/root/reference/streamlit_app.py:139`. The pivot values are
+  * always an explicit list, so no distinct-collect pre-job scans the input.
+  * Each value's column is a conditional sum in one hash aggregate: Spark's
+  * own `pivot` plans two aggregates (by index and pivot value, then by
+  * index) and so two shuffles.
   *
   * U1 union: `/root/reference/main.py:149` — `pd.concat` aligns by column
   * name and null-fills gaps; `unionByName(allowMissingColumns = true)` is
@@ -32,14 +33,18 @@ object Reshape {
     df.unpivot(ids.map(col).toArray, values.map(col).toArray, varName, valueName)
       .filter(col(valueName).isNotNull)
 
-  /** R2: long→wide with an explicit pivot-value list (skips the distinct
-    * pre-job) and a single SUM measure, the reference's only pivot shape.
+  /** R2: long→wide with an explicit pivot-value list and a single SUM
+    * measure, the reference's only pivot shape. Column `v` sums `valueCol`
+    * over the rows whose `pivotCol` is `v`; a cell without rows is null,
+    * as with `pivot(pivotCol, pivotValues).sum(valueCol)`.
     */
   def pivotSum(df: DataFrame, index: Seq[String], pivotCol: String,
-               pivotValues: Seq[String], valueCol: String): DataFrame =
-    df.groupBy(index.map(col): _*)
-      .pivot(pivotCol, pivotValues)
-      .sum(valueCol)
+               pivotValues: Seq[String], valueCol: String): DataFrame = {
+    require(pivotValues.nonEmpty, "pivotSum needs at least one pivot value")
+    val cells = pivotValues.map(v =>
+      sum(when(col(pivotCol) === lit(v), col(valueCol))).as(v))
+    df.groupBy(index.map(col): _*).agg(cells.head, cells.tail: _*)
+  }
 
   /** U1: schema-aligning union-all by name across frames with
     * heterogeneous column sets; missing columns null-fill.
