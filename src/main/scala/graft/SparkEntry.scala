@@ -8,7 +8,8 @@ import graft.io.Tables
 import graft.ops.{CleanText, Reshape, Tidy}
 import graft.agg.{Charts, Profile, Robust}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The 26 reference-parity queries and their DuckDB oracles
+  * (SURVEY.md §7), dumped by [[Verify]].
   *
   * Query-name → SURVEY §2 row mapping is in each entry's comment. Every
   * query is deterministic (total ordering, ties broken by key) and
@@ -50,13 +51,7 @@ object SparkEntry {
 
   // ---- queries ---------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    referenceQueries ++ ExtQueries.queries
-
-  def oracleSql: Map[String, String] =
-    referenceOracles ++ ExtQueries.oracleSql
-
-  private def referenceQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // A1 (+P8 path exercised in p8_nullfill_group): the clean_admissions
     // group-sum — dims × SUM(measure), one shuffle, partial agg map-side.
@@ -303,7 +298,7 @@ object SparkEntry {
 
   // ---- oracles ---------------------------------------------------------
 
-  private def referenceOracles: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = Map(
 
     "a1_clean_aggregate" ->
       """SELECT o_orderstatus, o_orderpriority,

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
@@ -88,23 +90,28 @@ private[sources] case class SheetPartition(
 
 private[sources] object SheetPlanning {
 
-  /** Decode dispatch: real `.xlsx` workbooks go through the JDK-only
-    * [[XlsxWorkbook]] codec, anything else through the [[TextWorkbook]]
-    * offline encoding — one directory may mix both.
+  /** Read and decode one workbook file. Decode dispatch: real `.xlsx`
+    * workbooks go through the JDK-only [[XlsxWorkbook]] codec, anything
+    * else through the [[TextWorkbook]] offline encoding — one directory
+    * may mix both. A workbook that does not decode fails naming its path.
     */
-  def decodeWorkbook(path: String,
-                     bytes: Array[Byte]): Seq[(String, Seq[Seq[String]])] =
-    if (path.toLowerCase(java.util.Locale.ROOT).endsWith(".xlsx"))
-      XlsxWorkbook.decode(bytes)
-    else TextWorkbook.decode(bytes)
-
-  def readBytes(p: Path, conf: Configuration): Array[Byte] = {
+  def readWorkbook(p: Path, conf: Configuration): Seq[(String, Seq[Seq[String]])] = {
     val in = p.getFileSystem(conf).open(p)
-    try in.readAllBytes() finally in.close()
+    val bytes = try in.readAllBytes() finally in.close()
+    try {
+      if (p.getName.toLowerCase(java.util.Locale.ROOT).endsWith(".xlsx"))
+        XlsxWorkbook.decode(bytes)
+      else TextWorkbook.decode(bytes)
+    } catch { case NonFatal(e) =>
+      throw new IllegalArgumentException(
+        s"cannot decode workbook $p: ${e.getMessage}", e)
+    }
   }
 
   /** Driver-side planning pass: unified schema + one partition per
-    * gated, header-recognizable sheet.
+    * gated, header-recognizable sheet. Like `compile_all`
+    * (`main.py:147-148`), it raises when no sheet is recognised, so a
+    * refresh over it fails before any write.
     */
   def plan(dir: String): (StructType, Seq[SheetPartition]) = {
     val conf = new Configuration()
@@ -114,10 +121,10 @@ private[sources] object SheetPlanning {
       .sortBy(_.getName)
     val parts = for {
       f <- files.toSeq
-      (name, sheet) <- Ingest.recognisedSheets(f.getName,
-        decodeWorkbook(f.getName, readBytes(f, conf)))
+      (name, sheet) <- Ingest.recognisedSheets(f.getName, readWorkbook(f, conf))
     } yield SheetPartition(f.toString, name, sheet.year, sheet.headerIdx,
       sheet.header)
+    require(parts.nonEmpty, s"no frames parsed in $dir")
     (SheetParser.tidySchema(parts.flatMap(_.header.idCols)), parts)
   }
 }
@@ -187,8 +194,7 @@ private[sources] class SheetPartitionReader(
 
   private val rows: Iterator[InternalRow] = {
     val grid = SheetPlanning
-      .decodeWorkbook(p.path,
-        SheetPlanning.readBytes(new Path(p.path), new Configuration()))
+      .readWorkbook(new Path(p.path), new Configuration())
       .collectFirst { case (n, g) if n == p.sheet => g }
       .getOrElse(Seq.empty)
     // null separations drop inside tidyRows (main.py:128) — a row

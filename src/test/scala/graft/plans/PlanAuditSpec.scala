@@ -10,52 +10,24 @@ import org.apache.spark.sql.functions._
   * sweep with a broken grep spelling; see PlanAudit's scaladoc).
   *
   * For EVERY query in SparkEntry.queries this spec parses the formatted
-  * physical plan and asserts the three scale-killer shapes only occur
-  * over bounded inputs:
+  * physical plan and asserts the scale-killer shapes only occur over
+  * bounded inputs:
   *   - `Exchange SinglePartition` must be (a) the global-aggregate
   *     final pass (producer = keys-empty partial aggregate — one
-  *     pre-combined row per upstream partition), (b) the two-phase rank
-  *     machinery's `__b*` bucket-totals table (≤256 rows by
-  *     construction), or (c) in the per-query bounded-domain inventory
-  *     below, each entry carrying its written bound;
+  *     pre-combined row per upstream partition) or (b) the two-phase
+  *     rank machinery's `__b*` bucket-totals table (≤256 rows by
+  *     construction);
   *   - `CartesianProduct`: zero, everywhere, no exceptions;
   *   - global windows (windowspecdefinition without partition keys):
-  *     same `__b*` / inventory rule.
+  *     same `__b*` rule;
+  *   - `BroadcastNestedLoopJoin`: only the 1-row scalar broadcast shape.
   *
-  * A new query that reintroduces a data-sized global window or
-  * single-partition sort FAILS this spec (proven by the planted-
-  * offender test at the bottom) and must either be refactored onto the
-  * bucketed two-phase machinery or argue its bound into the inventory.
+  * No query has an allowance. A new query that reintroduces a data-sized
+  * global window or single-partition sort FAILS this spec (proven by the
+  * planted-offender tests at the bottom) and must be refactored onto the
+  * bucketed two-phase machinery.
   */
 class PlanAuditSpec extends SparkTestBase {
-
-  /** Queries whose partition-free shapes are over DOCUMENTED bounded
-    * domains (the PERF.md round-8 inventory, kept in lockstep with the
-    * contracts written at each operator site). */
-  private val boundedInventory: Map[String, String] = Map(
-    "x_calib_iso" -> ("repartition(1) for the weighted-PAV scan over " +
-      "the <=1001-row distinct-integer-score table (documented " +
-      "bounded-domain contract of the isotonic series)"),
-    "x_kaplan_meier" -> ("global windows over the DISTINCT event " +
-      "durations table - follow-up-bounded by the KM contract"),
-    "x_vocab_coverage" -> "global window over the top-500 vocab table")
-
-  /** BroadcastNestedLoopJoins whose build side is NOT the structural
-    * 1-row scalar shape but IS bounded by construction — each entry
-    * names the bound (the round-5 manual BNLJ audit, now enforced). */
-  private val bnljInventory: Map[String, String] = Map(
-    "x_ab_test" -> "per-variant (2-row) aggregate combine",
-    "x_ann_brute_topk" -> ("deliberate baseline: literal query-id set " +
-      "broadcast against one corpus scan"),
-    "x_ann_ivf_topk" -> "C-row coarse-centroid table legs (IVF)",
-    "x_ann_ivf_probe2" -> "C-row coarse-centroid table legs (IVF)",
-    "x_ann_ivfpq_topk" -> "C-row coarse-centroid table legs (IVF+PQ)",
-    "x_chi2" -> ("marginal x marginal cell-grid enumeration - bounded " +
-      "by the discrete domains (zero-observed cells need their " +
-      "expected mass)"),
-    "x_domain_centroids" -> "|domains|-row centroid table",
-    "x_hybrid_rrf" -> "literal query-id vector set broadcast (fusion)",
-    "x_theta_setops" -> "per-segment sketch-pair combine rows")
 
   /** Bucket-machinery columns: the ≤`buckets`-row bucket-totals tables
     * of ops/Ranks and ext/Eval.strictlyBelow (`__b`, `__bk`, `__bt_*`,
@@ -76,35 +48,25 @@ class PlanAuditSpec extends SparkTestBase {
       audited += 1
       report.cartesianProducts.foreach(cp =>
         violations += s"$name: CartesianProduct id=${cp.id}")
-      if (!boundedInventory.contains(name)) {
-        report.singlePartitionExchanges
-          .filterNot(PlanAudit.isPartialAggFinalPass(report, _))
-          .filterNot(ex => isBucketBounded(ex.input))
-          .foreach(ex => violations += s"$name: SinglePartition " +
-            s"exchange id=${ex.id} over ${ex.input} (child " +
-            s"${report.childOf(ex).map(_.name).getOrElse("?")})")
-        report.globalWindows
-          .filterNot(w => isBucketBounded(w.input))
-          .foreach(w => violations += s"$name: global window " +
-            s"id=${w.id} over ${w.input}")
-      }
-      if (!bnljInventory.contains(name)) {
-        report.broadcastNestedLoops
-          .filterNot(PlanAudit.isScalarBroadcastBNLJ(report, _))
-          .foreach(b => violations += s"$name: non-scalar " +
-            s"BroadcastNestedLoopJoin id=${b.id}")
-      }
+      report.singlePartitionExchanges
+        .filterNot(PlanAudit.isPartialAggFinalPass(report, _))
+        .filterNot(ex => isBucketBounded(ex.input))
+        .foreach(ex => violations += s"$name: SinglePartition " +
+          s"exchange id=${ex.id} over ${ex.input} (child " +
+          s"${report.childOf(ex).map(_.name).getOrElse("?")})")
+      report.globalWindows
+        .filterNot(w => isBucketBounded(w.input))
+        .foreach(w => violations += s"$name: global window " +
+          s"id=${w.id} over ${w.input}")
+      report.broadcastNestedLoops
+        .filterNot(PlanAudit.isScalarBroadcastBNLJ(report, _))
+        .foreach(b => violations += s"$name: non-scalar " +
+          s"BroadcastNestedLoopJoin id=${b.id}")
     }
     assert(audited == SparkEntry.queries.size)
     assert(violations.isEmpty,
-      s"\n${violations.size} un-inventoried scale-killer shapes:\n" +
+      s"\n${violations.size} scale-killer shapes:\n" +
         violations.mkString("\n"))
-    // the inventory can only shrink deliberately: every entry must
-    // still name a live query (a renamed/removed query must clean up
-    // its allowance, not leave a stale hole for a future query)
-    val stale = (boundedInventory.keySet ++ bnljInventory.keySet) --
-      SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"stale inventory entries: $stale")
   }
 
   test("a planted data-sized broadcast nested loop IS flagged, while " +

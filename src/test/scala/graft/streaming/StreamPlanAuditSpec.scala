@@ -93,16 +93,15 @@ class StreamPlanAuditSpec extends SparkTestBase {
 
   // ---------- classification: the PlanAudit batch-gate criteria ----------
 
-  /** Per-sink BNLJ allowances, the PlanAuditSpec `bnljInventory`
-    * convention: non-scalar BroadcastNestedLoopJoins whose build side
-    * is bounded BY CONSTRUCTION, each entry naming the bound. */
+  /** Per-sink BNLJ allowances: non-scalar BroadcastNestedLoopJoins
+    * whose build side is bounded BY CONSTRUCTION, each entry naming the
+    * bound. */
   private val bnljInventory: Map[String, String] = Map(
     "ivfIndexSink" -> ("C-row coarse-centroid codebook broadcast — " +
-      "assignCells' nearest-cell attach, the batch gate's " +
-      "x_ann_ivf_* allowance carried to the per-batch segment write"),
+      "assignCells' nearest-cell attach in the per-batch segment write"),
     "chi2DriftSink" -> ("marginal × marginal cell-grid enumeration — " +
       "bounded by the discrete category domains (zero-observed cells " +
-      "need their expected mass), the batch gate's x_chi2 allowance"))
+      "need their expected mass)"))
 
   /** Bucket-machinery columns (PlanAuditSpec's rule verbatim): the
     * ≤`buckets`-row bucket-totals tables of ops/Ranks and

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.ext.Events
@@ -140,9 +141,14 @@ class StreamSpec extends SparkTestBase {
     val events = Events.loadEventsTimestamped(spark, sf)
       .select($"ts", $"user_id", $"event_type", $"value").as[Event]
     val emitted = sessionizeWithState(events).count()
-    val totalSessions = graft.ExtQueries
-      .queries("x_events_sessions")(spark, sf)
-      .agg(sum("n_sessions")).head().getLong(0)
+    // batch oracle: per user, ordered by (ts_sec, event_id), a row opens
+    // a session when it has no predecessor or follows a gap over 1800 s
+    val w = Window.partitionBy($"user_id").orderBy($"ts_sec", $"event_id")
+    val prev = lag($"ts_sec", 1).over(w)
+    val totalSessions = batch
+      .select(when(prev.isNull || $"ts_sec" - prev > 1800, 1L)
+        .otherwise(0L).as("is_new"))
+      .agg(sum("is_new")).head().getLong(0)
     val nUsers = batch.select("user_id").distinct().count()
     // every user's last session is still open (never emitted)
     assert(emitted == totalSessions - nUsers)
